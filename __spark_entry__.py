@@ -771,26 +771,34 @@ def q_events_sessions(spark, sf_dir):
     )
 
 
+def _in_every_graph(group: str) -> str:
+    """The N-Quads documents (doc_id % 4 = 3) live in named graphs: match
+    a group in the default graph and in every named graph."""
+    return f"{{ {group} }} UNION {{ GRAPH ?g {{ {group} }} }}"
+
+
+_SPARQL_BGP_FILTER = f"""
+SELECT ?doc WHERE {{
+  {_in_every_graph(f"?doc <{PROP_NS}lang> ?lang ; <{PROP_NS}source> ?src")}
+  FILTER(?lang = "en" && ?src = "src0")
+}}"""
+
+_SPARQL_OPTIONAL_MINUS = f"""
+SELECT ?doc WHERE {{ {_in_every_graph(
+    f'?doc <{PROP_NS}lang> "en" OPTIONAL {{ ?doc <{PROP_NS}source> ?src }} '
+    f'MINUS {{ ?doc <{PROP_NS}source> "src3" }}')} }}"""
+
+
 def q_sparql_bgp_filter(spark, sf_dir):
-    t = _triples(spark, sf_dir)
-    t1 = t.where((F.col("p") == PROP_NS + "lang") & (F.col("o") == "en")).select(
-        F.col("s").alias("doc")
-    )
-    t2 = t.where((F.col("p") == PROP_NS + "source") & (F.col("o") == "src0")).select(
-        F.col("s").alias("doc")
-    )
-    return t1.join(t2, "doc").select("doc")
+    from mentor_rdf_parsers_spark.sparql.executor import execute
+
+    return execute(_SPARQL_BGP_FILTER, _triples(spark, sf_dir))
 
 
 def q_sparql_optional_minus(spark, sf_dir):
-    t = _triples(spark, sf_dir)
-    t1 = t.where((F.col("p") == PROP_NS + "lang") & (F.col("o") == "en")).select(
-        F.col("s").alias("doc")
-    )
-    t2 = t.where((F.col("p") == PROP_NS + "source") & (F.col("o") == "src3")).select(
-        F.col("s").alias("doc")
-    )
-    return t1.join(t2, "doc", "left_anti").select("doc")
+    from mentor_rdf_parsers_spark.sparql.executor import execute
+
+    return execute(_SPARQL_OPTIONAL_MINUS, _triples(spark, sf_dir))
 
 
 # --- SPARQL-executor family (the reference parses SPARQL; we execute it) ---

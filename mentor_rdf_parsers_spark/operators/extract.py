@@ -74,36 +74,11 @@ def _doc_text(spans) -> str:
     return "".join(t for _off, t in texts)
 
 
-# Content-addressed parse cache (worker-level). Real crawl corpora are
-# full of byte-identical documents (mirrors, boilerplate); parsing each
-# copy is pure waste. Quads are cached with a reserved skolem prefix and
-# re-prefixed per doc_id on hit — byte-identical output to a cold parse.
-_PARSE_CACHE_PREFIX = "\x00P\x00"
-_PARSE_CACHE_MAX = 4096
-
-
-def _reprefix_quads(quads, prefix: str):
-    out = []
-    ph = _PARSE_CACHE_PREFIX
-    for (s, p, o, g, so, po, oo) in quads:
-        def fix(t):
-            if t is None:
-                return None
-            if t[0] == "bnode" and ph in t[1]:
-                return ("bnode", t[1].replace(ph, prefix))
-            if t[0] == "tripleterm":
-                return ("tripleterm", tuple(fix(x) for x in t[1]))
-            return t
-        out.append((fix(s), fix(p), fix(o), fix(g), so, po, oo))
-    return out
-
-
 def extract_triples(
     docs: DataFrame,
     skolemize: bool = True,
     strict: bool = False,
     default_syntax: str = "turtle",
-    dedup_parse: bool = False,
 ) -> DataFrame:
     """documents → combined extract DataFrame (rec='t' triples, rec='e' errors).
 
@@ -114,7 +89,6 @@ def extract_triples(
     has_syntax = "syntax" in docs.columns
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}  # (syntax, text) -> (quads-with-placeholder, errors)
         for pdf in batches:
             cols: dict[str, list] = {c: [] for c in EXTRACT_COLS}
             doc_ids = pdf["doc_id"]
@@ -133,23 +107,7 @@ def extract_triples(
                     gen = default_bnode_generator
                     prefix = None
                 try:
-                    if dedup_parse and skolemize:
-                        key = (syntax, text)
-                        hit = cache.get(key)
-                        if hit is None:
-                            ph_gen = file_scoped_bnode_generator(
-                                doc_id, prefix=_PARSE_CACHE_PREFIX
-                            )
-                            hit = _parse_one(
-                                syntax, text, ph_gen, _PARSE_CACHE_PREFIX, strict
-                            )
-                            if len(cache) >= _PARSE_CACHE_MAX:
-                                cache.pop(next(iter(cache)))
-                            cache[key] = hit
-                        quads = _reprefix_quads(hit[0], prefix)
-                        errors = hit[1]
-                    else:
-                        quads, errors = _parse_one(syntax, text, gen, prefix, strict)
+                    quads, errors = _parse_one(syntax, text, gen, prefix, strict)
                 except Exception as exc:  # absolute quarantine backstop
                     quads, errors = [], [("parse", 0, f"internal: {exc}")]
                 for (s, p, o, g, so, po, oo) in quads:

@@ -19,10 +19,12 @@ North_rule requirements implemented here:
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import LINEAGE_METRICS
 
@@ -115,15 +117,26 @@ def write_stage(
         else:
             bucketed = bucketed.repartition("s_bucket")
     bucketed.write.mode("overwrite").partitionBy("s_bucket").parquet(out)
-    spark = triples.sparkSession
-    written = spark.read.parquet(out)
+    # the schema beside the data (hidden from parquet readers by its
+    # leading underscore): read_stage then needs no footer-reading job
+    with open(os.path.join(out, "_schema.json"), "w") as f:
+        f.write(bucketed.schema.json())
+    written = read_stage(triples.sparkSession, base_dir, stage)
     metrics = partition_metrics(written, stage)
     metrics.write.mode("overwrite").parquet(os.path.join(base_dir, stage + "_metrics"))
     return True
 
 
 def read_stage(spark: SparkSession, base_dir: str, stage: str = "triples") -> DataFrame:
-    return spark.read.parquet(os.path.join(base_dir, stage))
+    """A materialized stage, read with the schema write_stage recorded, so
+    building the plan starts no Spark job to infer it."""
+    path = os.path.join(base_dir, stage)
+    schema_file = os.path.join(path, "_schema.json")
+    reader = spark.read
+    if os.path.exists(schema_file):
+        with open(schema_file) as f:
+            reader = reader.schema(StructType.fromJson(json.load(f)))
+    return reader.parquet(path)
 
 
 def read_metrics(spark: SparkSession, base_dir: str, stage: str = "triples") -> DataFrame:

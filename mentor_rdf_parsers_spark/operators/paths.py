@@ -62,33 +62,6 @@ def transitive_closure(
     return closure
 
 
-def path_edges(triples: DataFrame, predicate: str, inverse: bool = False) -> DataFrame:
-    """Triples with predicate `p` as an edge list (`^p` swaps ends —
-    the SPARQL inverse path, src/sparql/parser.ts:1744-1752)."""
-    e = triples.where(F.col("p") == predicate)
-    if inverse:
-        return e.select(F.col("o").alias("src"), F.col("s").alias("dst"))
-    return e.select(F.col("s").alias("src"), F.col("o").alias("dst"))
-
-
-def path_sequence(left: DataFrame, right: DataFrame) -> DataFrame:
-    """`p1/p2` sequence path: join on the middle node."""
-    return (
-        left.alias("a")
-        .join(right.alias("b"), F.col("a.dst") == F.col("b.src"))
-        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-        .distinct()
-    )
-
-
-def path_alternative(*paths: DataFrame) -> DataFrame:
-    """`p1|p2` alternative path: union."""
-    out = paths[0]
-    for p in paths[1:]:
-        out = out.union(p)
-    return out.distinct()
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,

@@ -9,11 +9,14 @@ table in SURVEY.md §2.B:
     OPTIONAL           → left outer join
     UNION              → unionByName(allowMissingColumns)
     MINUS              → left anti join on shared vars
-    FILTER (NOT) EXISTS→ left semi / left anti join
+    FILTER (NOT) EXISTS→ left semi / left anti join (lazy, also with no
+                         shared vars)
     FILTER expr        → where()
     BIND               → withColumn
     VALUES             → createDataFrame + join (broadcast)
-    GRAPH              → filter/bind on the `g` column
+    GRAPH <iri>        → filter on the `g` column
+    GRAPH ?v           → every row tagged with its graph (`__active_g`),
+                         ?v bound where the graph node exits
     GROUP BY + aggs    → groupBy().agg()
     ORDER/LIMIT/OFFSET → orderBy / limit / row_number window
     property paths     → join chains; +/* via operators.paths closure
@@ -33,6 +36,7 @@ transitive closure from operators.paths.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -64,8 +68,37 @@ _NUMERIC_DTS = {
 }
 
 
+# Inside GRAPH ?v { P } every frame carries the graph it was evaluated in
+# as this TERM column, so joins, MINUS, EXISTS and subselect slices all
+# correlate per graph; ?v itself is bound only where the graph node exits.
+AG = "__active_g"
+
+
 class SparqlExecutionError(Exception):
     pass
+
+
+def _scope(graph) -> list:
+    """The internal columns a frame carries in this graph context."""
+    return [AG] if graph is not None and graph[0] == "var" else []
+
+
+def _s_term() -> Column:
+    return _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None))
+
+
+def _o_term() -> Column:
+    return _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt"))
+
+
+def _compat(a: Column, b: Column) -> Column:
+    """SPARQL compatibility of one variable: an unbound (NULL) side
+    matches anything."""
+    return a.isNull() | b.isNull() | (a == b)
+
+
+def _node_id(*cols: str) -> Column:
+    return F.xxhash64(*[F.to_json(c) for c in cols])
 
 
 def _term_struct(kind: Column, v: Column, lang: Column, dt: Column) -> Column:
@@ -236,14 +269,30 @@ class Executor:
     def _scan(self, graph: Optional[object]) -> DataFrame:
         """Base scan with graph context applied.
 
-        graph=None → default graph (g IS NULL); ('var', name) → named
-        graphs, g bound; ('iri', v) → that named graph."""
+        graph=None → default graph (g IS NULL); ('iri', v) → that named
+        graph; ('var', name) → every named graph, each row tagged with
+        its graph term as `__active_g`."""
         t = self.triples
         if graph is None:
             return t.where(F.col("g").isNull())
         if graph[0] == "iri":
             return t.where(F.col("g") == graph[1])
-        return t.where(F.col("g").isNotNull())
+        return t.where(F.col("g").isNotNull()).withColumn(AG, _term_struct(
+            F.coalesce(F.col("g_kind"), F.lit("iri")), F.col("g"),
+            F.lit(None), F.lit(None),
+        ))
+
+    def _unit(self, graph) -> DataFrame:
+        """The one empty solution μ0 — once per named graph inside
+        GRAPH ?v."""
+        if _scope(graph):
+            return self._scan(graph).select(AG).distinct()
+        return self.spark.range(1).select(F.lit(1).alias("__exists"))
+
+    def _everywhere(self, df: DataFrame, graph) -> DataFrame:
+        """A graph-independent frame (VALUES, SERVICE, a nested GRAPH)
+        holds in every named graph of a GRAPH ?v scope."""
+        return self._join_bindings(df, self._unit(graph)) if _scope(graph) else df
 
     def _pattern_df(self, s, p, o, graph) -> DataFrame:
         """One triple pattern → DataFrame of variable bindings."""
@@ -282,25 +331,15 @@ class Executor:
         bind(s, F.col("s_kind"), F.col("s"), F.lit(None).cast("string"), F.lit(None).cast("string"))
         bind(p, F.col("p_kind"), F.col("p"), F.lit(None).cast("string"), F.lit(None).cast("string"))
         bind(o, F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt"))
-        if graph is not None and graph[0] == "var":
-            gstruct = _term_struct(
-                F.coalesce(F.col("g_kind"), F.lit("iri")), F.col("g"),
-                F.lit(None).cast("string"), F.lit(None).cast("string"),
-            )
-            if graph[1] in proj:
-                # GRAPH ?a { ?a … }: the variable names both the graph
-                # and a pattern slot — constrain, don't overwrite (same
-                # repeated-variable class the round-5 fuzz caught in
-                # patterns and paths)
-                cond.append(proj[graph[1]] == gstruct)
-            else:
-                proj[graph[1]] = gstruct
         for c in cond:
             t = t.where(c)
         if not proj:
             # all-constant pattern: keep existence as a single marker row
+            # (per graph inside GRAPH ?v)
+            if _scope(graph):
+                return t.select(AG).distinct()
             return t.select(F.lit(1).alias("__exists")).limit(1)
-        return t.select([c.alias(n) for n, c in proj.items()])
+        return t.select([c.alias(n) for n, c in proj.items()] + _scope(graph))
 
     def _path_df(self, s, path, o, graph) -> DataFrame:
         """Property-path pattern → (start, end) bindings joined to s/o."""
@@ -321,31 +360,30 @@ class Executor:
             df = df.where(F.col("__src") == _const_term(s))
         if o[0] != "var":
             df = df.where(F.col("__dst") == _const_term(o))
-        if not out_cols:
+        if not out_cols and not _scope(graph):
             # both endpoints constant: μ0 multiplicity = number of path
             # matches (e.g. `<s> <p>/<q> <o>` with two intermediates is
             # μ0 × 2 per the spec's fresh-middle-variable translation) —
             # no limit(1) here, _join_bindings multiplies rows through
             return df.select(F.lit(1).alias("__exists"))
-        return df.select([c.alias(n) for n, c in out_cols.items()])
+        return df.select([c.alias(n) for n, c in out_cols.items()] + _scope(graph))
 
-    def _edge_df(self, pred_iri: str, graph) -> DataFrame:
-        t = self._scan(graph).where(
-            (F.col("p_kind") == "iri") & (F.col("p") == pred_iri)
-        )
-        return t.select(
-            _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__src"),
-            _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__dst"),
-        )
+    def _edges(self, t: DataFrame, graph, inverse: bool = False) -> DataFrame:
+        src, dst = (_o_term(), _s_term()) if inverse else (_s_term(), _o_term())
+        return t.select(src.alias("__src"), dst.alias("__dst"), *_scope(graph))
 
     def _path_pairs(self, path, graph) -> DataFrame:
+        """(__src, __dst) pairs of a path, plus `__active_g` inside
+        GRAPH ?v: every step stays within one graph."""
+        sc = _scope(graph)
         if isinstance(path, tuple):  # plain iri predicate
-            return self._edge_df(path[1], graph)
+            return self._edges(self._scan(graph).where(
+                (F.col("p_kind") == "iri") & (F.col("p") == path[1])), graph)
         op = path["path"]
         if op == "inv":
             inner = self._path_pairs(path["inner"], graph)
             return inner.select(
-                F.col("__dst").alias("__src"), F.col("__src").alias("__dst")
+                F.col("__dst").alias("__src"), F.col("__src").alias("__dst"), *sc
             )
         if op == "seq":
             # spec §18.4 translates X (P/Q) Y to a join over a fresh
@@ -353,12 +391,13 @@ class Executor:
             # intermediate nodes yield two copies of (src, dst). Only
             # the closure modifiers (? * +) are defined set-wise.
             # (round-5 differential fuzz vs the naive evaluator)
-            left = self._path_pairs(path["left"], graph)
-            right = self._path_pairs(path["right"], graph)
-            return (
-                left.alias("l")
-                .join(right.alias("r"), F.col("l.__dst") == F.col("r.__src"))
-                .select(F.col("l.__src").alias("__src"), F.col("r.__dst").alias("__dst"))
+            left = self._path_pairs(path["left"], graph).alias("l")
+            right = self._path_pairs(path["right"], graph).alias("r")
+            on = [F.col("l.__dst") == F.col("r.__src")]
+            on += [F.col(f"l.{c}") == F.col(f"r.{c}") for c in sc]
+            return left.join(right, on).select(
+                F.col("l.__src").alias("__src"), F.col("r.__dst").alias("__dst"),
+                *[F.col(f"l.{c}").alias(c) for c in sc],
             )
         if op == "alt":
             # bag union per spec (UNION of the two translations)
@@ -373,131 +412,129 @@ class Executor:
             parts = []
             if fwd_excl or not inv_excl:
                 fwd = t.where(~F.col("p").isin(fwd_excl) if fwd_excl else F.lit(True))
-                parts.append(fwd.select(
-                    _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__src"),
-                    _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__dst"),
-                ))
+                parts.append(self._edges(fwd, graph))
             if inv_excl:
-                inv = t.where(~F.col("p").isin(inv_excl))
-                parts.append(inv.select(
-                    _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__src"),
-                    _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__dst"),
-                ))
+                parts.append(self._edges(t.where(~F.col("p").isin(inv_excl)),
+                                         graph, inverse=True))
             # one solution per matching TRIPLE (multiset): two different
             # non-excluded predicates linking the same (s, o) are two rows
-            out = parts[0]
-            for p_ in parts[1:]:
-                out = out.union(p_)
-            return out
+            return reduce(DataFrame.union, parts)
         if op == "mod":
             inner = self._path_pairs(path["inner"], graph)
             if path["mod"] == "?":
-                nodes = self._all_nodes(graph)
-                return inner.union(nodes.select(F.col("__n").alias("__src"),
-                                                F.col("__n").alias("__dst"))).distinct()
-            closure = transitive_closure(
-                inner.select(F.xxhash64(F.to_json("__src")).alias("src"),
-                             F.xxhash64(F.to_json("__dst")).alias("dst"))
-            )
+                return inner.union(self._loops(graph)).distinct()
+            # closure over (node, graph) ids: a path never leaves its graph
+            closure = transitive_closure(inner.select(
+                _node_id("__src", *sc).alias("src"),
+                _node_id("__dst", *sc).alias("dst")))
             # map hashed ids back to terms
             nodes = (
-                inner.select(F.col("__src").alias("__n"))
-                .union(inner.select(F.col("__dst")))
+                inner.select(F.col("__src").alias("__n"), *sc)
+                .union(inner.select("__dst", *sc))
                 .distinct()
-                .withColumn("__id", F.xxhash64(F.to_json("__n")))
+                .withColumn("__id", _node_id("__n", *sc))
             )
             pairs = (
                 closure.join(nodes.select(F.col("__id").alias("src"),
-                                          F.col("__n").alias("__src")), "src")
+                                          F.col("__n").alias("__src"), *sc), "src")
                 .join(nodes.select(F.col("__id").alias("dst"),
                                    F.col("__n").alias("__dst")), "dst")
-                .select("__src", "__dst")
+                .select("__src", "__dst", *sc)
             )
             if path["mod"] == "*":
-                all_nodes = self._all_nodes(graph)
-                pairs = pairs.union(
-                    all_nodes.select(F.col("__n").alias("__src"), F.col("__n").alias("__dst"))
-                ).distinct()
+                pairs = pairs.union(self._loops(graph)).distinct()
             return pairs
         raise SparqlExecutionError(f"unsupported path {path!r}")
 
-    def _all_nodes(self, graph) -> DataFrame:
+    def _loops(self, graph) -> DataFrame:
+        """Zero-length path pairs (n, n) over every node of the graph."""
         t = self._scan(graph)
-        return (
-            t.select(_term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__n"))
-            .union(t.select(_term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__n")))
+        sc = _scope(graph)
+        nodes = (
+            t.select(_s_term().alias("__n"), *sc)
+            .union(t.select(_o_term().alias("__n"), *sc))
             .distinct()
         )
+        return nodes.select(F.col("__n").alias("__src"), F.col("__n").alias("__dst"), *sc)
 
     # ------------------------------------------------------------- patterns
     def _join_bindings(self, left: DataFrame, right: DataFrame, how: str = "inner") -> DataFrame:
-        shared = [c for c in left.columns if c in right.columns and not c.startswith("__")]
-        lx = left.drop("__exists") if "__exists" in left.columns else left
-        rx = right.drop("__exists") if "__exists" in right.columns else right
-        # A bindings-free frame is a MULTISET OF EMPTY SOLUTIONS — k rows
-        # = μ0 with multiplicity k (an all-constant pattern is a 0-or-1
-        # row existence gate; a UNION of two matching gates is μ0 × 2).
-        # Joining multiplies multiplicities, so zero rows annihilate an
-        # inner join (never act as identity) and m rows replicate the
-        # other side m times; a left join keeps left rows when the right
-        # is empty. A join on TRUE has exactly these semantics for both
-        # `inner` and `left`, so the `how` passes straight through.
-        # (The round-5 differential fuzz caught both the old
-        # `return other side` shortcut — `<s> <p> <o> .` matching
-        # nothing was a no-op — and a limit(1) here that collapsed
-        # union multiplicities.)
-        if not lx.columns and not rx.columns:
-            return (
-                left.select(F.lit(1).alias("__exists"))
-                .join(right.select(F.lit(1).alias("__e2")),
-                      F.lit(True), how)
-                .select(F.lit(1).alias("__exists"))
-            )
-        if not lx.columns:
-            gate = left.select(F.lit(1).alias("__gate"))
-            return gate.join(rx, F.lit(True), how).drop("__gate")
-        if not rx.columns:
-            gate = right.select(F.lit(1).alias("__gate"))
-            return lx.join(gate, F.lit(True), how).drop("__gate")
-        if shared:
-            # SPARQL compatible-join: an UNBOUND (NULL) shared variable is
-            # compatible with any binding and the merged solution takes the
-            # bound side. Plain equi-joins are null-unsafe and would drop
-            # such solutions. Shared vars can only be unbound when they came
-            # through OPTIONAL / UNION-with-missing-branch — exactly the
-            # cases where Spark marks the column nullable — so the common
-            # all-bound case keeps the fast hashable equi-join and only
-            # nullable shared vars pay the condition-join.
-            nullable = [
-                c for c in shared
-                if lx.schema[c].nullable or rx.schema[c].nullable
-            ]
-            if not nullable:
-                return lx.join(rx, on=shared, how=how)
-            L, R = lx.alias("__L"), rx.alias("__R")
-            cond = None
-            for c in shared:
-                lc, rc = F.col(f"__L.`{c}`"), F.col(f"__R.`{c}`")
-                cc = (
-                    (lc.isNull() | rc.isNull() | (lc == rc))
-                    if c in nullable else (lc == rc)
-                )
-                cond = cc if cond is None else cond & cc
-            out = L.join(R, cond, how)
-            cols = [
-                (F.coalesce(F.col(f"__L.`{c}`"), F.col(f"__R.`{c}`")).alias(c)
-                 if c in shared else F.col(f"__L.`{c}`").alias(c))
-                for c in lx.columns
-            ] + [F.col(f"__R.`{c}`").alias(c) for c in rx.columns if c not in shared]
-            return out.select(*cols)
-        if how == "inner":
-            return lx.crossJoin(rx)
-        if how == "left":
-            # OPTIONAL with no shared vars: cross product when the right
-            # side has rows, but left rows MUST survive an empty right
-            # (a crossJoin would drop them) → left join on TRUE
-            return lx.join(rx, F.lit(True), "left")
-        raise SparqlExecutionError(f"join {how} without shared vars")
+        """The SPARQL compatible join of two binding frames, for every
+        operator that correlates solutions: `inner` (Join), `left`
+        (OPTIONAL), `left_semi` / `left_anti` (FILTER [NOT] EXISTS) and
+        `minus` (MINUS, §18.5).
+
+        Keys are the shared variables, plus `__active_g` when both sides
+        carry it. An unbound (NULL) key on EITHER side is compatible with
+        any value, and the merged solution takes the bound side; for
+        EXISTS this is §18.6 substitution (a variable unbound in the
+        outer row stays free, and one an inner UNION arm never binds
+        constrains nothing). Keys can only be unbound when they came
+        through OPTIONAL or a UNION arm that lacks them, exactly where
+        Spark marks the column nullable, so with no nullable key the
+        join stays a hashable equi-join and only nullable keys pay the
+        condition join."""
+        keys = [c for c in left.columns
+                if c in right.columns and (c == AG or not c.startswith("__"))]
+        variables = [c for c in keys if c != AG]
+        filtering = how in ("left_semi", "left_anti", "minus")
+        if filtering:
+            if how == "minus" and not variables:
+                # disjoint domains: Minus removes nothing
+                return left
+            # only whether a compatible right row exists matters: one row
+            # per distinct key, or any one row when nothing is shared
+            lx, rx = left, (right.select(keys).distinct() if keys
+                            else right.select(F.lit(1).alias("__r")).limit(1))
+        else:
+            # A bindings-free frame is a MULTISET OF EMPTY SOLUTIONS — k
+            # rows = μ0 with multiplicity k (an all-constant pattern is a
+            # 0-or-1 row existence gate; a UNION of two matching gates is
+            # μ0 × 2). Joining multiplies multiplicities, so zero rows
+            # annihilate an inner join (never act as identity) and m rows
+            # replicate the other side m times; a left join keeps left
+            # rows when the right is empty. A join on TRUE has exactly
+            # these semantics for both `inner` and `left`. (The round-5
+            # differential fuzz caught both the old `return other side`
+            # shortcut — `<s> <p> <o> .` matching nothing was a no-op —
+            # and a limit(1) here that collapsed union multiplicities.)
+            lx = left.drop("__exists") if "__exists" in left.columns else left
+            rx = right.drop("__exists") if "__exists" in right.columns else right
+            lx = lx if lx.columns else left.select(F.lit(1).alias("__l"))
+            rx = rx if rx.columns else right.select(F.lit(1).alias("__r"))
+        if not keys:
+            # a left join on TRUE keeps left rows when the right is empty
+            # (OPTIONAL with no shared vars); a crossJoin would drop them
+            out = lx.crossJoin(rx) if how == "inner" else lx.join(rx, F.lit(True), how)
+            rest = [c for c in out.columns if c not in ("__l", "__r")]
+            return out.select(rest) if rest else out.select(F.lit(1).alias("__exists"))
+        nullable = {c for c in keys if lx.schema[c].nullable or rx.schema[c].nullable}
+        join_how = "left_anti" if how == "minus" else how
+        if not nullable:
+            return lx.join(rx, on=keys, how=join_how)
+
+        def side(alias, c):
+            return F.col(f"{alias}.`{c}`")
+
+        cond = reduce(Column.__and__, [
+            _compat(side("__L", c), side("__R", c)) if c in nullable
+            else side("__L", c) == side("__R", c)
+            for c in keys
+        ])
+        if how == "minus":
+            # ... and only when the two solutions share a bound variable
+            cond = cond & reduce(Column.__or__, [
+                side("__L", c).isNotNull() & side("__R", c).isNotNull()
+                for c in variables
+            ])
+        out = lx.alias("__L").join(rx.alias("__R"), cond, join_how)
+        if filtering:
+            return out
+        return out.select(
+            *[(F.coalesce(side("__L", c), side("__R", c)) if c in keys
+               else side("__L", c)).alias(c) for c in lx.columns],
+            *[side("__R", c).alias(c) for c in rx.columns if c not in keys],
+        )
 
     def _compile_pattern(self, node, graph) -> DataFrame:
         t = node["type"]
@@ -521,9 +558,7 @@ class Executor:
                 else:
                     pat = self._pattern_df(s, p, o, graph)
                 df = pat if df is None else self._join_bindings(df, pat)
-            if df is None:
-                return self.spark.range(1).select(F.lit(1).alias("__exists"))
-            return df
+            return self._unit(graph) if df is None else df
         if t == "group":
             df = None
             filters = []
@@ -533,43 +568,21 @@ class Executor:
                     continue
                 if sub["type"] == "optional":
                     inner = self._compile_pattern(sub["pattern"], graph)
-                    base = df if df is not None else self.spark.range(1).select(
-                        F.lit(1).alias("__exists"))
+                    base = df if df is not None else self._unit(graph)
                     df = self._join_bindings(base, inner, "left")
                     continue
                 if sub["type"] == "minus":
-                    if df is None:
-                        # Minus({μ0}, Ω) = {μ0}: the empty solution's
-                        # domain never overlaps any μ2, so a MINUS that
-                        # opens a group removes nothing (spec §18.5) —
-                        # don't even evaluate the right side
-                        continue
-                    inner = self._compile_pattern(sub["pattern"], graph)
-                    shared = [c for c in df.columns
-                              if c in inner.columns and not c.startswith("__")]
-                    if shared:
-                        nullable = [c for c in shared
-                                    if df.schema[c].nullable or inner.schema[c].nullable]
-                        rsub = inner.select(shared).distinct()
-                        if not nullable:
-                            df = df.join(rsub, on=shared, how="left_anti")
-                        else:
-                            # spec MINUS: drop μ1 iff ∃μ2 compatible (per-var
-                            # NULL-tolerant equality) AND dom(μ1)∩dom(μ2)≠∅
-                            # (at least one shared var bound on BOTH sides)
-                            L, R = df.alias("__L"), rsub.alias("__R")
-                            compat, overlap = None, None
-                            for c in shared:
-                                lc, rc = F.col(f"__L.`{c}`"), F.col(f"__R.`{c}`")
-                                cc = lc.isNull() | rc.isNull() | (lc == rc)
-                                ov = lc.isNotNull() & rc.isNotNull()
-                                compat = cc if compat is None else compat & cc
-                                overlap = ov if overlap is None else overlap | ov
-                            df = L.join(R, compat & overlap, "left_anti")
+                    # Minus({μ0}, Ω) = {μ0}: the empty solution's domain
+                    # never overlaps any μ2, so a MINUS that opens a group
+                    # removes nothing (spec §18.5) — don't even evaluate
+                    # the right side
+                    if df is not None:
+                        df = self._join_bindings(
+                            df, self._compile_pattern(sub["pattern"], graph), "minus")
                     continue
                 if sub["type"] == "bind":
                     if df is None:
-                        df = self.spark.range(1).select(F.lit(1).alias("__exists"))
+                        df = self._unit(graph)
                     df = df.withColumn(sub["var"], self._expr_term(sub["expr"], df))
                     if "__exists" in df.columns:
                         df = df.drop("__exists")
@@ -580,7 +593,7 @@ class Executor:
                 inner = self._compile_pattern(sub, graph)
                 df = inner if df is None else self._join_bindings(df, inner)
             if df is None:
-                df = self.spark.range(1).select(F.lit(1).alias("__exists"))
+                df = self._unit(graph)
             for fexpr in filters:
                 df = self._apply_filter(df, fexpr, graph)
             return df
@@ -590,53 +603,38 @@ class Executor:
             # LeftJoin(unit, P): when P matches nothing the result is ONE
             # solution with every variable unbound, not zero solutions
             # (round-5 differential fuzz vs the naive evaluator)
-            unit = self.spark.range(1).select(F.lit(1).alias("__exists"))
             inner = self._compile_pattern(node["pattern"], graph)
-            return self._join_bindings(unit, inner, "left")
+            return self._join_bindings(self._unit(graph), inner, "left")
         if t == "union":
             left = self._compile_pattern(node["left"], graph)
             right = self._compile_pattern(node["right"], graph)
             return left.unionByName(right, allowMissingColumns=True)
         if t == "filter":
-            base = self.spark.range(1).select(F.lit(1).alias("__exists"))
-            return self._apply_filter(base, node["expr"], graph)
+            return self._apply_filter(self._unit(graph), node["expr"], graph)
         if t == "graph":
-            inner = self._compile_pattern(node["pattern"], node["name"])
             name = node["name"]
-            if name is not None and name[0] == "var":
-                # Graph(var, P) = ⋃ over named graphs g of
-                # Join(eval(D[g], P), {var→g}).  Patterns inside P bind
-                # the var per matched row, but pattern-free P (a BIND/
-                # VALUES/filter-only group) binds nothing, and UNION
-                # arms without patterns carry NULL — join with the
-                # DISTINCT named-graph names so those rows multiply
-                # over the graphs while bound rows pass through ×1 (the
-                # compat join treats NULL as wildcard and keeps the
-                # bound side).  The names frame is tiny → broadcast.
-                # (Round-5 differential fuzz.)
-                names = (
-                    self.triples.where(F.col("g").isNotNull())
-                    .select(_term_struct(
-                        F.coalesce(F.col("g_kind"), F.lit("iri")),
-                        F.col("g"),
-                        F.lit(None).cast("string"),
-                        F.lit(None).cast("string"),
-                    ).alias(name[1]))
-                    .distinct()
-                )
-                inner = self._join_bindings(inner, names)
-            return inner
+            inner = self._compile_pattern(node["pattern"], name)
+            if _scope(name):
+                # Graph(?v, P) = ⋃ over named graphs g of
+                # Join(eval(D[g], P), {?v→g}): P ran once per graph, every
+                # row tagged with it, so ?v is bound here and only here —
+                # as a compat join, so `GRAPH ?a { ?a … }` constrains ?a
+                v, g = name[1], F.col(AG)
+                if v in inner.columns:
+                    inner = inner.where(_compat(F.col(v), g))
+                    g = F.coalesce(F.col(v), g)
+                inner = inner.withColumn(v, g).drop(AG)
+            return self._everywhere(inner, graph)
         if t == "values":
-            return self._values_df(node)
+            return self._everywhere(self._values_df(node), graph)
         if t == "subselect":
             # a subquery inherits the active graph (§13.3.1: GRAPH sets
             # the context for everything inside, subselects included)
-            return self._run_select(node["query"], keep_structs=True,
-                                    graph=graph)
+            return self._run_select(node["query"], graph)
         if t == "minus":
             # parser collapses one-element groups, so `{ MINUS { P } }`
             # can arrive bare: Minus({μ0}, Ω) = {μ0} (see group handling)
-            return self.spark.range(1).select(F.lit(1).alias("__exists"))
+            return self._unit(graph)
         if t == "service":
             # Federation-lite (r5): a SERVICE IRI resolves against the
             # locally registered dataset map (Executor(services={iri:
@@ -651,11 +649,11 @@ class Executor:
                 sub = Executor(
                     self.services[name[1]], self.spark, self.services
                 )
-                return sub._compile_pattern(node["pattern"], None)
+                return self._everywhere(sub._compile_pattern(node["pattern"], None), graph)
             if node.get("silent"):
                 # SERVICE SILENT over an unreachable endpoint yields the
                 # single empty solution (identity for the join)
-                return self.spark.range(1).select(F.lit(1).alias("__exists"))
+                return self._unit(graph)
             if name[0] != "iri":
                 raise SparqlExecutionError(
                     "SERVICE with a variable endpoint is not supported"
@@ -670,7 +668,7 @@ class Executor:
             # can arrive bare: Extend({μ0}, v, e) — one solution, with v
             # unbound when the expression errors (same collapse class as
             # bare OPTIONAL/MINUS; round-5 differential fuzz)
-            unit = self.spark.range(1).select(F.lit(1).alias("__exists"))
+            unit = self._unit(graph)
             return unit.withColumn(
                 node["var"], self._expr_term(node["expr"], unit)
             ).drop("__exists")
@@ -734,34 +732,8 @@ class Executor:
     def _apply_filter(self, df: DataFrame, expr, graph) -> DataFrame:
         if isinstance(expr, dict) and expr.get("op") == "exists":
             inner = self._compile_pattern(expr["pattern"], graph)
-            shared = [c for c in df.columns
-                      if c in inner.columns and not c.startswith("__")]
-            how = "left_anti" if expr["neg"] else "left_semi"
-            if shared:
-                rx = inner.select(shared).distinct()
-                # §18.6 substitution semantics: a row whose shared var is
-                # UNBOUND (NULL, e.g. out of an OPTIONAL) leaves that
-                # variable FREE in the substituted pattern — it matches
-                # ANY inner binding, so plain equality (which drops NULL
-                # keys, and under left_anti wrongly KEEPS the row) is
-                # wrong. Split so the all-bound majority still plans as
-                # an equi semi/anti join (the 100 TB path) and only the
-                # some-unbound residual pays the compat (NULL-is-
-                # wildcard) non-equi join.  (Round-5 differential fuzz.)
-                any_null = F.lit(False)
-                for c in shared:
-                    any_null = any_null | F.col(c).isNull()
-                bound = df.where(~any_null).join(rx, on=shared, how=how)
-                resid = df.where(any_null)
-                li, ri = resid.alias("__exl"), rx.alias("__exr")
-                cond = F.lit(True)
-                for c in shared:
-                    lc, rc = F.col(f"__exl.{c}"), F.col(f"__exr.{c}")
-                    cond = cond & (lc.isNull() | (lc == rc))
-                return bound.unionByName(li.join(ri, cond, how))
-            has = inner.limit(1).count() > 0
-            keep = (not has) if expr["neg"] else has
-            return df if keep else df.limit(0)
+            return self._join_bindings(
+                df, inner, "left_anti" if expr["neg"] else "left_semi")
         return df.where(self._expr_bool(expr, df))
 
     # ---------------------------------------------------------- expressions
@@ -1141,24 +1113,17 @@ class Executor:
         raise SparqlExecutionError(f"unsupported aggregate {name}")
 
     # ------------------------------------------------------------- queries
-    def _run_select(self, q, keep_structs: bool, graph=None) -> DataFrame:
+    def _run_select(self, q, graph=None) -> DataFrame:
         df = self._compile_pattern(q["where"], graph)
         if q.get("values"):
             vdf = self._values_df(q["values"])
             df = self._join_bindings(df, vdf)
         mods = q.get("modifiers", {})
         proj = q["projection"]
-
-        # a subselect under GRAPH ?var evaluates PER NAMED GRAPH
-        # (§13.3): its projection must keep the graph variable so the
-        # outer join stays correlated to the active graph — dropping it
-        # silently cross-joined rows from ALL graphs (round-5 soak
-        # fuzz).  DISTINCT then dedups (row, graph) = per-graph
-        # distinct, and aggregates group per graph, as the spec's
-        # union-over-graphs requires.
-        gcarry = None
-        if graph is not None and graph[0] == "var" and graph[1] in df.columns:
-            gcarry = graph[1]
+        # a subselect under GRAPH ?v runs once per named graph (§13.3):
+        # `__active_g` rides through grouping, projection and DISTINCT,
+        # and the slice below is cut per graph
+        sc = _scope(graph)
 
         group_by = mods.get("group_by")
         has_agg = any(p[0] == "expr" and _has_agg(p[1]) for p in proj if proj != "*")
@@ -1184,52 +1149,54 @@ class Executor:
                     expr, alias = p[1], p[2]
                     aggs.append(self._agg_expr_struct(expr, df).alias(alias))
                     out_names.append(alias)
-            if gcarry and gcarry not in keys:
-                keys.append(gcarry)
-                out_names.append(gcarry)
+            keys += sc
             gdf = df.groupBy(*[F.col(k) for k in keys]) if keys else df.groupBy()
             df = gdf.agg(*aggs) if aggs else gdf.agg(F.count("*").alias("__n")).drop("__n")
             for h in mods.get("having", []):
                 df = df.where(self._expr_bool(h, df))
-            df = df.select(*[F.col(n) for n in out_names])
+            df = df.select(*[F.col(n) for n in out_names + sc])
         else:
             if proj == "*":
                 cols = [c for c in df.columns if not c.startswith("__") and not c.startswith("?")]
+                cols += sc
                 df = df.select(*cols) if cols else df
             else:
                 sel = []
-                names = set()
                 for p in proj:
                     if p[0] == "var":
                         sel.append(self._col(df, p[1]).alias(p[1]))
-                        names.add(p[1])
                     else:
                         sel.append(self._expr_term(p[1], df).alias(p[2]))
-                        names.add(p[2])
-                if gcarry and gcarry not in names:
-                    sel.append(F.col(gcarry).alias(gcarry))
-                df = df.select(*sel)
+                df = df.select(*sel, *sc)
 
         if q.get("distinct") or q.get("reduced"):
             df = df.dropDuplicates()
-        order = mods.get("order_by")
-        if order:
-            cols = []
-            for direction, expr in order:
-                if isinstance(expr, tuple) and expr[0] == "var" and expr[1] in df.columns:
-                    c = F.when(
-                        F.col(expr[1])["dt"].isin(*_NUMERIC_DTS),
-                        F.col(expr[1])["v"].cast("double"),
-                    ).otherwise(F.lit(None))
-                    c2 = F.col(expr[1])["v"]
-                    for base in (c, c2):
-                        cols.append(base.desc() if direction == "desc" else base.asc())
-                else:
-                    c = self._expr_term(expr, df)["v"]
-                    cols.append(c.desc() if direction == "desc" else c.asc())
-            df = df.orderBy(*cols)
-        offset = mods.get("offset")
+        order = []
+        for direction, expr in mods.get("order_by") or []:
+            if isinstance(expr, tuple) and expr[0] == "var" and expr[1] in df.columns:
+                c = F.when(
+                    F.col(expr[1])["dt"].isin(*_NUMERIC_DTS),
+                    F.col(expr[1])["v"].cast("double"),
+                ).otherwise(F.lit(None))
+                c2 = F.col(expr[1])["v"]
+                for base in (c, c2):
+                    order.append(base.desc() if direction == "desc" else base.asc())
+            else:
+                c = self._expr_term(expr, df)["v"]
+                order.append(c.desc() if direction == "desc" else c.asc())
+        offset = mods.get("offset") or 0
         limit = mods.get("limit")
+        if sc and (offset or limit is not None):
+            # per-graph slice: number each graph's rows in ORDER BY order
+            # (any order without one — §18.5 makes that slice arbitrary)
+            rn = F.row_number().over(
+                Window.partitionBy(AG).orderBy(*(order or [F.lit(0)])))
+            df = df.withColumn("__rn", rn).where(F.col("__rn") > offset)
+            if limit is not None:
+                df = df.where(F.col("__rn") <= offset + limit)
+            return df.drop("__rn")
+        if order:
+            df = df.orderBy(*order)
         if offset:
             # Native Offset node (Spark >= 3.4). With ORDER BY + LIMIT the
             # planner fuses sort/offset/limit into TakeOrderedAndProject
@@ -1260,12 +1227,13 @@ class Executor:
     def run(self, q) -> DataFrame:
         form = q["form"]
         if form == "select":
-            return self._run_select(q, keep_structs=True)
+            return self._run_select(q)
         if form == "ask":
-            inner = Executor(self.triples, self.spark)
-            df = inner._compile_pattern(q["where"], None)
-            has = df.limit(1).count() > 0
-            return self.spark.createDataFrame([(has,)], "ask boolean")
+            # a lazy one-row frame: true iff the pattern has a solution
+            hit = self._compile_pattern(q["where"], None).select(
+                F.lit(1).alias("__hit")).limit(1)
+            return self._unit(None).join(hit, F.lit(True), "left").select(
+                F.col("__hit").isNotNull().alias("ask"))
         if form == "construct":
             df = self._compile_pattern(q["where"], None)
             outs = []

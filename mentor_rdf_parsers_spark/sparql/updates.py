@@ -161,7 +161,8 @@ def execute_update(
             for gctx in graphs:
                 sub = [(s, p, o) for (s, p, o, g) in op["quads"]
                        if (g if g else None) == gctx]
-                b = ex._compile_pattern({"type": "bgp", "triples": sub}, gctx)
+                b = ex._compile_pattern({"type": "graph", "name": gctx, "pattern": {
+                    "type": "bgp", "triples": sub}}, None)
                 v = _instantiate(ex, b, [(s, p, o, gctx) for (s, p, o) in sub])
                 victims = v if victims is None else victims.unionByName(v)
             current = _remove(current, victims)

@@ -150,14 +150,19 @@ def values_element(draw):
     return ("values", vs, rows)
 
 
-# FILTER (NOT) EXISTS — inner groups restricted to plain patterns, where
-# §18.6 substitution == seeded evaluation (no inner filters that could
-# see outer bindings differently, no MINUS substitution wart); unbound
-# shared vars (via OPTIONAL upstream) exercise the NULL-is-wildcard
-# semi/anti-join split in the executor
+# FILTER (NOT) EXISTS — inner groups restricted to plain patterns, or a
+# UNION of two plain-pattern lists, where §18.6 substitution == seeded
+# evaluation (no inner filters that could see outer bindings
+# differently, no MINUS substitution wart); unbound shared vars (via
+# OPTIONAL upstream, or a UNION arm that lacks the variable) exercise
+# the NULL-is-wildcard semi/anti join in the executor
+plain_pats = st.lists(pattern_el, min_size=1, max_size=2)
 exists_el = st.builds(
     lambda pats, neg: ("filter", ("exists", pats, neg)),
-    st.lists(pattern_el, min_size=1, max_size=2),
+    st.one_of(
+        plain_pats,
+        st.builds(lambda a, b: [("union", a, b)], plain_pats, plain_pats),
+    ),
     st.booleans(),
 )
 
@@ -213,11 +218,14 @@ def subselect_element(draw):
     return ("subselect", proj, inner, draw(st.booleans()))
 
 
-def group_st(depth: int):
+def group_st(depth: int, paths: bool = False):
     els = [pattern_el, filter_el, values_element(), exists_el, bind_el,
            subselect_element()]
+    if paths:
+        els.append(st.builds(lambda s, p, o: ("pathpattern", s, p, o),
+                             s_slot, path_st(1), o_slot))
     if depth > 0:
-        sub = group_st(depth - 1)
+        sub = group_st(depth - 1, paths)
         els.append(st.builds(lambda g: ("optional", g), sub))
         els.append(st.builds(lambda a, b: ("union", a, b), sub, sub))
         els.append(st.builds(lambda g: ("minus", g), sub))
@@ -290,6 +298,9 @@ def render_group(elements) -> str:
     for el in elements:
         if el[0] == "pattern":
             parts.append(" ".join(sparql_token(t) for t in el[1]) + " .")
+        elif el[0] == "pathpattern":
+            parts.append(f"{sparql_token(el[1])} {sparql_path(el[2])} "
+                         f"{sparql_token(el[3])} .")
         elif el[0] == "optional":
             parts.append("OPTIONAL { " + render_group(el[1]) + " }")
         elif el[0] == "union":
@@ -466,12 +477,13 @@ def test_group_count_matches_naive(spark, case):
 # GRAPH g { … }: constant IRI selects one named graph; a variable ranges
 # over the named graphs, binding (or CONSTRAINING, when the inner group
 # also binds it — hence ?a as a graph slot) the graph name. Inner groups
-# reuse the full grammar, so subselects/EXISTS/BIND inherit the context.
+# reuse the full grammar plus property paths, so subselects/EXISTS/BIND
+# and every path step inherit the context.
 graph_slot = st.sampled_from([("var", "a"), ("var", "g")] + G_IRIS)
 
 
 def graph_group_st(depth: int):
-    inner = group_st(depth)
+    inner = group_st(depth, paths=True)
     graph_el_st = st.builds(
         lambda gs, g: ("graph", gs, g), graph_slot, inner)
     return st.lists(

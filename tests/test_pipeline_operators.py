@@ -36,11 +36,7 @@ from mentor_rdf_parsers_spark.operators.multimodal import (
     media_from_documents,
     sample_frames,
 )
-from mentor_rdf_parsers_spark.operators.paths import (
-    path_alternative,
-    path_sequence,
-    transitive_closure,
-)
+from mentor_rdf_parsers_spark.operators.paths import transitive_closure
 from mentor_rdf_parsers_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dup_pairs,
@@ -328,15 +324,6 @@ def test_transitive_closure_chain(spark):
     assert closure.where("src = 0").count() == 64
 
 
-def test_path_sequence_and_alternative(spark):
-    e1 = spark.createDataFrame([("a", "b")], "src string, dst string")
-    e2 = spark.createDataFrame([("b", "c")], "src string, dst string")
-    seq = path_sequence(e1, e2).collect()
-    assert [(r["src"], r["dst"]) for r in seq] == [("a", "c")]
-    alt = path_alternative(e1, e2)
-    assert alt.count() == 2
-
-
 # ---------------------------------------------------------------- multimodal
 
 
@@ -429,7 +416,15 @@ def test_write_stage_resume_and_metrics(spark, tmp_path):
     assert write_stage(t, base, "triples", n_buckets=8) is True
     # resume: second call is a no-op
     assert write_stage(t, base, "triples", n_buckets=8) is False
-    back = read_stage(spark, base, "triples")
+    # read with the schema write_stage recorded: no footer-reading job
+    sc = spark.sparkContext
+    sc.setJobGroup("read_stage", "read_stage")
+    try:
+        back = read_stage(spark, base, "triples")
+        assert list(sc.statusTracker().getJobIdsForGroup("read_stage")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert back.schema == spark.read.parquet(f"{base}/triples").schema
     assert back.count() == 100
     assert "s_bucket" in back.columns
     # same subject always lands in the same bucket

@@ -126,23 +126,3 @@ def test_corpus_precision_recall_gate(spark):
     assert pr["docs"] >= 30
     assert pr["precision"] >= 0.95, pr
     assert pr["recall"] >= 0.95, pr
-
-
-def test_dedup_parse_cache_identical_output(spark):
-    """Content-addressed parse cache must be byte-identical to cold
-    parsing, including skolemized bnode ids across replicated docs."""
-    from mentor_rdf_parsers_spark.sources.fixtures import (
-        load_fixture_documents,
-        replicate_documents,
-    )
-
-    docs = replicate_documents(
-        load_fixture_documents(spark, syntaxes=["turtle", "ntriples"]), 3
-    )
-    cold_t, cold_e = split_extract(extract_triples(docs))
-    hot_t, hot_e = split_extract(extract_triples(docs, dedup_parse=True))
-    cols = ["doc_id", "s_kind", "s", "p", "o_kind", "o", "o_lang", "o_dt", "g"]
-    assert cold_t.count() == hot_t.count()
-    assert cold_t.select(cols).exceptAll(hot_t.select(cols)).count() == 0
-    assert hot_t.select(cols).exceptAll(cold_t.select(cols)).count() == 0
-    assert cold_e.count() == hot_e.count()

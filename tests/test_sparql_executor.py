@@ -291,6 +291,62 @@ def test_minus_unshared_bound_var_still_removes_exact(graph):
     assert rows(out, "p") == [("http://ex/dave",)]
 
 
+# --- GRAPH ?var scope and EXISTS correlation: pinned regressions ---------
+
+_PIN_COLS = ("doc_id string, s_kind string, s string, p_kind string, "
+             "p string, o_kind string, o string, o_lang string, o_dt string, "
+             "g_kind string, g string, s_off int, p_off int, o_off int")
+
+# (s, p, o, g) over local names; g=None is the default graph
+_PIN_QUADS = {
+    "mixed": [("x", "p", "x", "g0"), ("y", "p", "z", "g1"),
+              ("y", "p", "w", "g1"), ("a", "q", "b", None),
+              ("c", "q", "d", None)],
+    "chain": [("x", "p", "y", "g0"), ("y", "p", "z", "g1")],
+}
+
+
+@pytest.mark.parametrize("quads, query, cols, expected", [
+    pytest.param(
+        "mixed", "SELECT ?a { GRAPH ?a { FILTER EXISTS { ?a ?b ?a } } }",
+        ("a",), [("g0",)], id="graph_var_filter_exists"),
+    pytest.param(
+        "mixed", "SELECT ?s { ?s :q ?o FILTER EXISTS "
+                 "{ { ?s :q :none } UNION { ?u :q ?v } } }",
+        ("s",), [("a",), ("c",)], id="exists_union_arm_unbound"),
+    pytest.param(
+        "mixed", "SELECT ?s { ?s :q ?o FILTER NOT EXISTS "
+                 "{ { ?s :q :none } UNION { ?u :q ?v } } }",
+        ("s",), [], id="not_exists_union_arm_unbound"),
+    pytest.param(
+        "mixed", "SELECT ?g ?s { GRAPH ?g { SELECT ?s { ?s ?p ?o } LIMIT 1 } }",
+        ("g", "s"), [("g0", "x"), ("g1", "y")], id="subselect_limit_per_graph"),
+    pytest.param(
+        "chain", "SELECT ?g ?a ?b { GRAPH ?g { ?a :p/:p ?b } }",
+        ("g", "a", "b"), [], id="path_seq_per_graph"),
+    pytest.param(
+        "chain", "SELECT ?g ?a ?b { GRAPH ?g { ?a ^:p ?b } }",
+        ("g", "a", "b"), [("g0", "y", "x"), ("g1", "z", "y")],
+        id="path_inverse_per_graph"),
+    pytest.param(
+        "chain", "SELECT ?g ?a ?b { GRAPH ?g { ?a :p+ ?b } }",
+        ("g", "a", "b"), [("g0", "x", "y"), ("g1", "y", "z")],
+        id="path_plus_per_graph"),
+])
+def test_graph_scope_and_exists_regressions(spark, quads, query, cols, expected):
+    """Each case once returned a wrong answer: GRAPH ?v must evaluate
+    its group once per named graph (EXISTS, subselect slices and
+    property paths included), and EXISTS must treat a variable left
+    unbound by the inner pattern as compatible with any binding."""
+    ex = "http://ex/"
+    df = spark.createDataFrame(
+        [("doc", "iri", ex + s, "iri", ex + p, "iri", ex + o, None, None,
+          "iri" if g else None, ex + g if g else None, None, None, None)
+         for s, p, o, g in _PIN_QUADS[quads]], _PIN_COLS)
+    got = [tuple(v[len(ex):] for v in r) for r in rows(execute(PREFIX + query, df), *cols)]
+    assert got == expected
+
+
 def test_describe_var_stays_distributed(graph, monkeypatch):
     """DESCRIBE with variable targets must build the IRI set as a
     semi-join, never collecting bindings to the driver (a driver-side

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import extract_manifest
+from conftest import REF, extract_manifest
 from mentor_rdf_parsers_spark.sparql import (
     SparqlParseError,
     parse_sparql,
@@ -19,14 +19,14 @@ MANIFEST = extract_manifest("sparql")
 
 
 @pytest.mark.parametrize(
-    "path", MANIFEST["positive"], ids=lambda p: p.split("/tests/")[-1]
+    "path", MANIFEST["positive"], ids=lambda p: str(p).split("/tests/")[-1]
 )
 def test_positive_fixture_parses(path):
     parse_sparql(open(path, encoding="utf-8").read())
 
 
 @pytest.mark.parametrize(
-    "path", MANIFEST["negative"], ids=lambda p: p.split("/tests/")[-1]
+    "path", MANIFEST["negative"], ids=lambda p: str(p).split("/tests/")[-1]
 )
 def test_negative_fixture_rejected(path):
     with pytest.raises(SparqlParseError):
@@ -34,8 +34,9 @@ def test_negative_fixture_rejected(path):
 
 
 def test_manifest_is_substantial():
-    assert len(MANIFEST["positive"]) >= 200
-    assert len(MANIFEST["negative"]) >= 60
+    missing = f"SPARQL fixture manifest missing or short: {REF / 'sparql'}"
+    assert len(MANIFEST["positive"]) >= 200, missing
+    assert len(MANIFEST["negative"]) >= 60, missing
 
 
 # --- reference utils parity (src/sparql/parser.ts:299-429, utils.ts:274-326)
